@@ -1,4 +1,4 @@
-from .vectors import cosine_similarity, dot, l2_norm, scale_by
+from .vectors import cosine, dot, dot_literal_sql, l2_norm, with_norm
 from .text import (
     fingerprint_md5,
     normalize_text,
@@ -8,10 +8,11 @@ from .text import (
 )
 
 __all__ = [
-    "cosine_similarity",
+    "cosine",
     "dot",
+    "dot_literal_sql",
     "l2_norm",
-    "scale_by",
+    "with_norm",
     "fingerprint_md5",
     "normalize_text",
     "token_count",

@@ -10,7 +10,7 @@ the same doubles left-to-right (the DuckDB oracle does).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,22 +33,31 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def dot_literal_sql(vec_sql: str, vec) -> str:
+    """SQL text for dot(vec_sql, literal vec) as one left-to-right fold.
 
-
-def scale_by(a: Column, divisor: Column) -> Column:
-    """Divide every element by ``divisor``.
-
-    PERFORMANCE CONTRACT: ``divisor`` must be a cheap expression or a
-    materialized column reference — anything referenced inside the
-    lambda is re-evaluated per array element. Unit-normalizing is
-    therefore two projections:
-
-        df.withColumn("n", l2_norm(F.col("v")))
-          .withColumn("unit", scale_by(F.col("v"), F.col("n")))
-
-    (an inline ``scale_by(v, l2_norm(v))`` would recompute the norm per
-    element — O(d^2) per vector).
+    A literal vector (hyperplane, centroid, principal component) is
+    embedded in the plan as ONE ``F.expr`` parse: the column-object form
+    costs a py4j round trip per operator node. repr() round-trips
+    doubles exactly, so the parsed literals are bit-identical to the
+    NumPy values.
     """
-    return F.transform(_as_double(a), lambda x: x / divisor)
+    arr = "array(" + ",".join(f"{float(x)!r}D" for x in vec) + ")"
+    return (
+        f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> cast(x AS double) * y), "
+        "0D, (acc, x) -> acc + x)"
+    )
+
+
+def with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
+    """Materialize ``l2_norm(vec_col)`` once per row as ``norm_col``.
+
+    Pair scoring then costs one dot product per pair (``cosine``) —
+    an inline norm would be recomputed for every pair a row joins.
+    """
+    return df.withColumn(norm_col, l2_norm(F.col(vec_col)))
+
+
+def cosine(a: str, b: str, a_norm: str, b_norm: str) -> Column:
+    """Cosine of two array columns over norms materialized by ``with_norm``."""
+    return dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm))

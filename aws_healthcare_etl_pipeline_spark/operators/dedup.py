@@ -28,23 +28,19 @@ from ..functions.text import (
     normalize_text,
     shingles_from_tokens,
     tokens,
-    word_shingles,
 )
 from .parallelism import widen
 
 
 # ---------------------------------------------------------------- exact
 
-def drop_exact_duplicates(
-    df: DataFrame, text_col: str, id_col: str, normalized: bool = True
-) -> DataFrame:
-    """Keep exactly one row (lowest id) per distinct text.
+def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Keep exactly one row (lowest id) per distinct normalized text.
 
     Deterministic alternative to ``dropDuplicates`` (which keeps an
     arbitrary row). One shuffle on the md5 fingerprint.
     """
-    key = fingerprint_md5(F.col(text_col)) if normalized else F.md5(F.encode(F.col(text_col), "UTF-8"))
-    w = Window.partitionBy(key).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy(fingerprint_md5(F.col(text_col))).orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -172,6 +168,21 @@ def _bucket_pairs(
     return pairs.select("p.id_a", "p.id_b").distinct()
 
 
+def _with_sides(pairs: DataFrame, docs: DataFrame, value_col: str, prefix: str) -> DataFrame:
+    """Fetch ``docs.value_col`` for both ends of each (id_a, id_b)
+    candidate pair, as ``{prefix}_a`` / ``{prefix}_b`` (``docs`` is keyed
+    by ``doc_id``) — the verify stages read candidate pairs only."""
+    side = docs.select("doc_id", value_col)
+    for end in ("a", "b"):
+        pairs = pairs.join(
+            side.withColumnRenamed("doc_id", f"id_{end}").withColumnRenamed(
+                value_col, f"{prefix}_{end}"
+            ),
+            f"id_{end}",
+        )
+    return pairs
+
+
 # ------------------------------------------------------------- MinHash
 
 def _seed_minima_expr(base_attr: str, num_hashes: int) -> Column:
@@ -192,35 +203,6 @@ def _seed_minima_expr(base_attr: str, num_hashes: int) -> Column:
         for i in range(num_hashes)
     )
     return F.expr(f"array({parts})")
-
-
-def minhash_signature_from_shingles(shingles: Column, num_hashes: int = 64) -> Column:
-    """Array of ``num_hashes`` min-over-shingles hash values, straight
-    from a shingle-array column. Convenience/test form: the inline
-    base array is re-evaluated per seed transform; the hot path
-    (``minhash_near_duplicates``) materializes the base hashes as a
-    column and uses ``_seed_minima_expr`` instead.
-    """
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    # CAUTION: the per-seed lambda must take exactly ONE parameter.
-    # PySpark dispatches higher-order-function lambdas by arity: a
-    # 2-arg lambda is called as (element, index), so the old
-    # ``lambda b, i=i: xxhash64(lit(i), b)`` had its seed default
-    # silently replaced by the array-index Column — collapsing all
-    # ``num_hashes`` functions into ONE position-sensitive hash and
-    # destroying the signature (caught by the r2 ground-truth sweep;
-    # pinned in tests/test_operators.py::test_minhash_seed_family).
-    def _seed_min(seed: int) -> Column:
-        return F.array_min(F.transform(base, lambda b: F.xxhash64(F.lit(seed), b)))
-
-    return F.array(*[_seed_min(i) for i in range(num_hashes)])
-
-
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_size: int = 3) -> Column:
-    """MinHash signature straight from a text column."""
-    sh = F.array_distinct(word_shingles(text, shingle_size))
-    return minhash_signature_from_shingles(sh, num_hashes)
 
 
 def _band_hashes_expr(sig_attr: str, bands: int, rows: int) -> Column:
@@ -311,15 +293,12 @@ def minhash_near_duplicates(
     # one groupBy + in-bucket pair expansion (single shuffle of compact
     # (id, band_hash) rows; ~35% faster than the bucket self-join).
     candidates = _bucket_pairs(buckets, ["band", "band_hash"], observation=observation)
-    sh = sigs.select("doc_id", "shingles")
-    verified = (
-        candidates.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
+    return (
+        _with_sides(candidates, sigs, "shingles", "sh")
         .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
 
 
 # ------------------------------------------------------------- SimHash
@@ -435,16 +414,8 @@ def simhash_near_duplicates(
         ).alias("band", "band_val"),
     )
     candidates = _bucket_pairs(banded, ["band", "band_val"], observation=observation)
-    s = sigs
     return (
-        candidates.join(
-            s.withColumnRenamed("doc_id", "id_a").withColumnRenamed("simhash", "sh_a"),
-            "id_a",
-        )
-        .join(
-            s.withColumnRenamed("doc_id", "id_b").withColumnRenamed("simhash", "sh_b"),
-            "id_b",
-        )
+        _with_sides(candidates, sigs, "simhash", "sh")
         .select(
             "id_a",
             "id_b",
@@ -646,30 +617,14 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b")
     )
     # stage 1: cheap hash-array Jaccard with a safety margin
-    hsets = hashed.select("doc_id", "hs")
     pre = (
-        candidates.join(
-            hsets.withColumnRenamed("doc_id", "id_a").withColumnRenamed("hs", "h_a"),
-            "id_a",
-        )
-        .join(
-            hsets.withColumnRenamed("doc_id", "id_b").withColumnRenamed("hs", "h_b"),
-            "id_b",
-        )
+        _with_sides(candidates, hashed, "hs", "h")
         .filter(jaccard(F.col("h_a"), F.col("h_b")) >= threshold - 0.05)
         .select("id_a", "id_b")
     )
     # stage 2: exact string-set Jaccard on the survivors only
-    sh = hashed.select("doc_id", "shingles")
     return (
-        pre.join(
-            sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a"),
-            "id_a",
-        )
-        .join(
-            sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("shingles", "sh_b"),
-            "id_b",
-        )
+        _with_sides(pre, hashed, "shingles", "sh")
         .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .withColumn(

@@ -20,23 +20,11 @@ actual scan (9s -> ~3s train at sf0.1).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot, l2_norm
-
-
-def _dot_expr(vec_col: str, vec: np.ndarray) -> str:
-    """SQL text for dot(vec_col, literal vec) as a left-to-right fold.
-
-    repr() round-trips doubles exactly, so the parsed literals are
-    bit-identical to the NumPy values.
-    """
-    arr = "array(" + ",".join(f"{float(x)!r}D" for x in vec) + ")"
-    return (
-        f"aggregate(zip_with({vec_col}, {arr}, (x, y) -> cast(x AS double) * y), "
-        "0D, (acc, x) -> acc + x)"
-    )
+from ..functions.vectors import dot_literal_sql, with_norm
+from .similarity import cosine_top_k
 
 
 def _with_centroid_dots(
@@ -47,7 +35,7 @@ def _with_centroid_dots(
     return df.select(
         "*",
         *[
-            F.expr(_dot_expr(vec_col, c)).alias(f"{prefix}{i}")
+            F.expr(dot_literal_sql(vec_col, c)).alias(f"{prefix}{i}")
             for i, c in enumerate(centroids)
         ],
     )
@@ -139,7 +127,7 @@ def ivf_top_k(
             corpus_vec,
             _argmax_dot(n_centroids).alias("cluster"),
         )
-        .withColumn("c_norm", l2_norm(F.col(corpus_vec)))
+        .transform(with_norm, corpus_vec, "c_norm")
     )
 
     scored_centroids = F.array(
@@ -161,24 +149,7 @@ def ivf_top_k(
             query_vec,
             F.explode(probe_list).alias("cluster"),
         )
-        .withColumn("q_norm", l2_norm(F.col(query_vec)))
+        .transform(with_norm, query_vec, "q_norm")
     )
-
-    scored = (
-        c.join(q, "cluster")
-        .filter(F.col(corpus_id) != F.col(query_id))
-        .select(
-            query_id,
-            corpus_id,
-            (
-                dot(F.col(query_vec), F.col(corpus_vec))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    pairs = c.join(q, "cluster").filter(F.col(corpus_id) != F.col(query_id))
+    return cosine_top_k(pairs, k, corpus_id, corpus_vec, query_id, query_vec)

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ivf import _dot_expr
+from ..functions.vectors import dot_literal_sql
 
 
 def covariance_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[int, np.ndarray, np.ndarray]:
@@ -118,7 +118,7 @@ def pca_project(
     shift folds into a constant offset per component)."""
     offsets = components @ mean  # (k,)
     scores = [
-        (F.expr(_dot_expr(vec_col, c)) - F.lit(float(off))).alias(f"__pc{i}")
+        (F.expr(dot_literal_sql(vec_col, c)) - F.lit(float(off))).alias(f"__pc{i}")
         for i, (c, off) in enumerate(zip(components, offsets))
     ]
     with_scores = df.select("*", *scores)

@@ -27,11 +27,12 @@ argmax (ivf.py's contract), ADC via zip_with/element_at/aggregate.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import l2_norm
+from ..functions.vectors import dot_literal_sql
 from .ivf import _argmax_dot
+from .topk import nearest_k
 
 
 def train_pq_codebooks(
@@ -73,13 +74,9 @@ def _sub_dot_expr(vec_col: str, s: int, d_sub: int, centroid: np.ndarray) -> str
     """SQL text: dot(subvector s of vec_col, literal centroid) minus
     half the centroid's squared norm — argmax of this over j equals
     argmin of squared euclidean distance, without computing ||v||^2."""
-    arr = "array(" + ",".join(f"{float(x)!r}D" for x in centroid) + ")"
     half_norm2 = float(centroid @ centroid) / 2.0
     sub = f"slice({vec_col}, {s * d_sub + 1}, {d_sub})"
-    return (
-        f"aggregate(zip_with({sub}, {arr}, (x, y) -> cast(x AS double) * y), "
-        f"0D, (acc, x) -> acc + x) - {half_norm2!r}D"
-    )
+    return f"{dot_literal_sql(sub, centroid)} - {half_norm2!r}D"
 
 
 def pq_encode(
@@ -124,12 +121,14 @@ def _lut_literal(tables: np.ndarray) -> str:
     )
 
 
-def adc_score(codes: Column, lut_sql: str) -> Column:
-    """sum over subspaces of LUT[s][code_s] — the ADC inner product."""
+def adc_score(codes: Column, lut: Column) -> Column:
+    """sum over subspaces of LUT[s][code_s] — the ADC inner product
+    (and, over a table of squared centroid norms, the approximate
+    squared norm of the coded vector)."""
     return F.aggregate(
         F.zip_with(
             codes,
-            F.expr(lut_sql),
+            lut,
             lambda c, row: F.element_at(row, c + F.lit(1)),
         ),
         F.lit(0.0),
@@ -146,7 +145,6 @@ def pq_top_k(
     codes_col: str = "codes",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k from codes only.
 
@@ -156,12 +154,9 @@ def pq_top_k(
     the codebooks: ||v||^2 ~ sum_s ||c_{s,code_s}||^2. The scan reads
     (id, codes) only; per row work is 2m lookups + a divide.
 
-    ``exclude_self`` (default True) drops corpus rows whose id equals
-    the query id — correct when queries are drawn FROM the corpus and
-    share its id space (the self-match is a trivial cosine-1 hit).
-    Pass False when the query id space is disjoint from the corpus,
-    where an accidental id collision would silently drop a legitimate
-    candidate."""
+    Corpus rows whose id equals the query id are dropped: queries are
+    drawn FROM the corpus and share its id space, so the self-match is
+    a trivial cosine-1 hit (the same contract as the exact tiers)."""
     m, kk, d_sub = books.shape
     qrows = queries.select(query_id, query_vec).collect()
     cent_norm2 = (books**2).sum(axis=2)  # (m, k)
@@ -185,38 +180,21 @@ def pq_top_k(
         )
     )
 
-    lookup_sum = lambda lut_col: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col(codes_col),
-            lut_col,
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     # approx corpus norm depends only on the codes — materialize once
     # per corpus row, not once per (row, query) pair
-    with_norm = encoded.withColumn(
-        "__c_norm", F.sqrt(lookup_sum(F.expr(norm_lut)))
+    codes = F.col(codes_col)
+    normed = encoded.withColumn(
+        "__c_norm", F.sqrt(adc_score(codes, F.expr(norm_lut)))
     )
-    joined = with_norm.crossJoin(luts)
-    if exclude_self:
-        joined = joined.filter(F.col(corpus_id) != F.col(query_id))
     scored = (
-        joined
+        normed.crossJoin(luts)
+        .filter(F.col(corpus_id) != F.col(query_id))
         .select(
             query_id,
             corpus_id,
             (
-                lookup_sum(F.col("__lut")) / (F.col("__q_norm") * F.col("__c_norm"))
+                adc_score(codes, F.col("__lut")) / (F.col("__q_norm") * F.col("__c_norm"))
             ).alias("approx_cosine"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("approx_cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "approx_cosine", "rank")
-    )
+    return nearest_k(scored, k, query_id, corpus_id, "approx_cosine")

@@ -7,11 +7,15 @@ Two tiers:
     shuffle of the corpus, then a windowed top-k on (query, score).
     At 100 TB this is the gold standard the ANN tier is measured
     against: linear in corpus size, embarrassingly parallel.
-  - ``lsh_top_k``: random-hyperplane (sign) LSH. A 16-bit signature
-    buckets the corpus; candidates = corpus rows whose signature is
-    within ``probe_hamming`` of the query signature (multi-probe), so
-    the scan touches only matching buckets. Recall < 1 by design; the
-    signature join shuffles only (bucket, id) pairs.
+  - ``lsh_top_k``: random-hyperplane (sign) LSH. Per-table signatures
+    bucket the corpus; candidates = corpus rows whose signature equals
+    the query's or one of its 1-bit flips (multi-probe), so the scan
+    touches only matching buckets. Recall < 1 by design; the signature
+    join shuffles only (bucket, id) pairs.
+
+Both tiers (and IVF, operators/ivf.py) end in the same exact
+verify-and-rank step, ``cosine_top_k``: cosine over materialized norms,
+then ``nearest_k``. A query's own id is never returned.
 
 Hyperplanes are generated with a fixed-seed NumPy RNG and embedded as
 literal arrays in the plan — deterministic across runs and engines.
@@ -20,10 +24,30 @@ literal arrays in the plan — deterministic across runs and engines.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot, l2_norm
+from ..functions.vectors import cosine, dot_literal_sql, with_norm
+from .topk import nearest_k
+
+
+def cosine_top_k(
+    pairs: DataFrame,
+    k: int,
+    corpus_id: str,
+    corpus_vec: str,
+    query_id: str,
+    query_vec: str,
+) -> DataFrame:
+    """Exact cosine over candidate (query, corpus) pairs that carry the
+    ``q_norm`` / ``c_norm`` columns of ``with_norm``, ranked by
+    ``nearest_k``: (query_id, corpus_id, cosine, rank)."""
+    scored = pairs.select(
+        query_id,
+        corpus_id,
+        cosine(query_vec, corpus_vec, "q_norm", "c_norm").alias("cosine"),
+    )
+    return nearest_k(scored, k, query_id, corpus_id, "cosine")
 
 
 def brute_force_top_k(
@@ -34,39 +58,16 @@ def brute_force_top_k(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Returns (query_id, vec_id, cosine) with rank<=k per query;
     deterministic tiebreak on (cosine desc, vec_id asc).
     """
-    # norms are materialized once per row on each side, so the per-pair
-    # work is a single dot product — the inline cosine_similarity form
-    # would recompute both norms for every (query, corpus) pair.
-    q = F.broadcast(
-        queries.select(query_id, query_vec).withColumn("q_norm", l2_norm(F.col(query_vec)))
-    )
-    c = corpus.select(corpus_id, corpus_vec).withColumn(
-        "c_norm", l2_norm(F.col(corpus_vec))
-    )
-    pairs = c.crossJoin(q)
-    if not include_self:
-        pairs = pairs.filter(F.col(corpus_id) != F.col(query_id))
-    scored = pairs.select(
-        query_id,
-        corpus_id,
-        (
-            dot(F.col(query_vec), F.col(corpus_vec))
-            / (F.col("q_norm") * F.col("c_norm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    q = F.broadcast(with_norm(queries.select(query_id, query_vec), query_vec, "q_norm"))
+    c = with_norm(corpus.select(corpus_id, corpus_vec), corpus_vec, "c_norm")
+    pairs = c.crossJoin(q).filter(F.col(corpus_id) != F.col(query_id))
+    return cosine_top_k(pairs, k, corpus_id, corpus_vec, query_id, query_vec)
 
 
 def _hyperplanes(dim: int, n: int, seed: int = 42) -> list[list[float]]:
@@ -81,17 +82,12 @@ def _table_signature(vec_col: str, planes: list[list[float]]) -> Column:
     Built as ONE SQL expression string: the column-object form costs a
     py4j round trip per operator node (~10 per plane; plan construction
     alone took seconds per call), while a single F.expr parses
-    table-at-once on the JVM. repr() round-trips doubles exactly, so
-    the parsed hyperplane literals are bit-identical to the NumPy
-    values. Disjoint power-of-two terms make + equivalent to OR.
+    table-at-once on the JVM (``dot_literal_sql``). Disjoint
+    power-of-two terms make + equivalent to OR.
     """
     parts = []
     for p, plane in enumerate(planes):
-        arr = "array(" + ",".join(f"{float(x)!r}D" for x in plane) + ")"
-        dot_sql = (
-            f"aggregate(zip_with({vec_col}, {arr}, (x, y) -> cast(x AS double) * y), "
-            "0D, (acc, x) -> acc + x)"
-        )
+        dot_sql = dot_literal_sql(vec_col, plane)
         parts.append(f"(CASE WHEN {dot_sql} > 0 THEN {1 << p} ELSE 0 END)")
     return F.expr(" + ".join(parts))
 
@@ -102,7 +98,6 @@ def lsh_candidates(
     dim: int,
     bits_per_table: int = 8,
     n_tables: int = 8,
-    multiprobe: bool = True,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
@@ -142,13 +137,10 @@ def lsh_candidates(
     for t, sc in enumerate(sig_cols):
         s = F.col(sc)
         probe_structs.append(F.struct(F.lit(t).alias("t"), s.alias("sig")))
-        if multiprobe:
-            for b in range(bits_per_table):
-                probe_structs.append(
-                    F.struct(
-                        F.lit(t).alias("t"), s.bitwiseXOR(F.lit(1 << b)).alias("sig")
-                    )
-                )
+        for b in range(bits_per_table):
+            probe_structs.append(
+                F.struct(F.lit(t).alias("t"), s.bitwiseXOR(F.lit(1 << b)).alias("sig"))
+            )
     q_probes = F.broadcast(
         with_sigs(queries.select(query_id, query_vec), query_vec)
         .select(query_id, F.explode(F.array(*probe_structs)).alias("probe"))
@@ -170,7 +162,6 @@ def lsh_top_k(
     dim: int,
     bits_per_table: int = 8,
     n_tables: int = 8,
-    multiprobe: bool = True,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
@@ -181,7 +172,7 @@ def lsh_top_k(
 
     Classic (b, L) scheme: L independent tables of b hyperplane-sign
     bits; a corpus vector is a candidate for a query if any table's
-    signatures collide. With ``multiprobe`` the query also probes every
+    signatures collide. Multi-probe: the query also probes every
     1-bit-flip of its signature (b extra probes/table), trading probe
     fan-out for fewer tables. Exact cosine is then computed on
     candidates only, so returned scores are exact — the approximation
@@ -200,40 +191,16 @@ def lsh_top_k(
         dim,
         bits_per_table=bits_per_table,
         n_tables=n_tables,
-        multiprobe=multiprobe,
         corpus_id=corpus_id,
         corpus_vec=corpus_vec,
         query_id=query_id,
         query_vec=query_vec,
         seed=seed,
     )
-    scored = (
-        candidates.join(
-            corpus.select(corpus_id, corpus_vec).withColumn(
-                "c_norm", l2_norm(F.col(corpus_vec))
-            ),
-            corpus_id,
-        )
-        .join(
-            F.broadcast(
-                queries.select(query_id, query_vec).withColumn(
-                    "q_norm", l2_norm(F.col(query_vec))
-                )
-            ),
-            query_id,
-        )
-        .select(
-            query_id,
-            corpus_id,
-            (
-                dot(F.col(query_vec), F.col(corpus_vec))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
+    pairs = candidates.join(
+        with_norm(corpus.select(corpus_id, corpus_vec), corpus_vec, "c_norm"), corpus_id
+    ).join(
+        F.broadcast(with_norm(queries.select(query_id, query_vec), query_vec, "q_norm")),
+        query_id,
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    return cosine_top_k(pairs, k, corpus_id, corpus_vec, query_id, query_vec)

@@ -28,3 +28,18 @@ def top_k_per_group(
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
+
+
+def nearest_k(
+    scored: DataFrame, k: int, query_id: str, corpus_id: str, score: str
+) -> DataFrame:
+    """The ranking step every similarity search ends with: the ``k``
+    highest-``score`` corpus rows per query, ties to the lower corpus
+    id. Returns (query_id, corpus_id, score, rank), rank from 1."""
+    return top_k_per_group(
+        scored,
+        [query_id],
+        [F.col(score).desc(), F.col(corpus_id).asc()],
+        k,
+        rank_col="rank",
+    ).select(query_id, corpus_id, score, "rank")

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8_sql, query
 
 # --------------------------------------------- McNemar
 
@@ -30,15 +30,6 @@ _SEG_W = (
     "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
 )
 _CHI2_05_MILLI = 3841
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 @query(
@@ -51,7 +42,7 @@ def _hex8_sql(expr: str) -> str:
                    CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                              AS BIGINT) // 100
                              + CAST({_SEG_W} AS BIGINT) * 10
-                             + ({_hex8_sql(
+                             + ({hex8_sql(
                                  "'noise:' || CAST(c_custkey"
                                  " AS VARCHAR)")}) % 4000 > 8000
                         THEN 1 ELSE 0 END AS y

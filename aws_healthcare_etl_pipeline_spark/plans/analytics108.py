@@ -18,24 +18,11 @@ PageRank.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import hex8_spark, hex8_sql, query
 
 
 # ------------------------------------------------ k-fold CV
@@ -51,7 +38,7 @@ _FOLDS = 5
     "ml_kfold_cv_accuracy",
     oracle=f"""
         WITH scored AS (
-            SELECT ({_hex8_sql("'cv:' || CAST(c_custkey AS VARCHAR)")})
+            SELECT ({hex8_sql("'cv:' || CAST(c_custkey AS VARCHAR)")})
                        % {_FOLDS} AS fold,
                    CASE WHEN (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                                    AS BIGINT) // 100
@@ -59,7 +46,7 @@ _FOLDS = 5
                              = (CAST(CAST(c_acctbal AS DECIMAL(15,2))
                                      * 100 AS BIGINT) // 100
                                 + CAST({_SEG_W} AS BIGINT) * 10
-                                + ({_hex8_sql(
+                                + ({hex8_sql(
                                     "'noise:' || CAST(c_custkey"
                                     " AS VARCHAR)")}) % 4000 > 8000)
                         THEN 1 ELSE 0 END AS ok
@@ -94,14 +81,14 @@ def ml_kfold_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" + CAST({_SEG_W} AS BIGINT) * 10"
     )
     noise = (
-        _hex8_spark(
+        hex8_spark(
             F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
         )
         % 4000
     )
     scored = cust.select(
         (
-            _hex8_spark(
+            hex8_spark(
                 F.concat(F.lit("cv:"), F.col("c_custkey").cast("string"))
             )
             % _FOLDS

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8_sql, query
 
 # ------------------------------------------------ RRF fusion
 
@@ -147,15 +147,6 @@ _COLS = ("l_returnflag", "l_linestatus", "shipmm")
 _BUCKET = 1 << 24  # 256 buckets over the 32-bit hash domain
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
 def _rle_oracle() -> str:
     per_col = []
     for c in _COLS:
@@ -185,7 +176,7 @@ def _rle_oracle() -> str:
             SELECT l_orderkey AS okey, l_linenumber AS oline,
                    l_returnflag, l_linestatus,
                    EXTRACT(month FROM l_shipdate) AS shipmm,
-                   {_hex8_sql(
+                   {hex8_sql(
                        "CAST(l_orderkey AS VARCHAR) || ':' "
                        "|| CAST(l_linenumber AS VARCHAR)")} AS hv
             FROM lineitem

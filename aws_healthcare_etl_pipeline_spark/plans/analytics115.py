@@ -18,24 +18,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import hex8_spark, hex8_sql, query
 
 
 # --------------------------------------------- equalized odds
@@ -58,7 +45,7 @@ _SEG_W = (
                    CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                              AS BIGINT) // 100
                              + CAST({_SEG_W} AS BIGINT) * 10
-                             + ({_hex8_sql(
+                             + ({hex8_sql(
                                  "'noise:' || CAST(c_custkey"
                                  " AS VARCHAR)")}) % 4000 > 8000
                         THEN 1 ELSE 0 END AS y
@@ -113,7 +100,7 @@ def fairness_equalized_odds_audit(
         f" + CAST({_SEG_W} AS BIGINT) * 10"
     )
     noise = (
-        _hex8_spark(
+        hex8_spark(
             F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
         )
         % 4000

@@ -31,23 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4_sql, query
 
 # ------------------------------------------------ stable matching
 
 _GS_ROUNDS = 16
-
-
-def _hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
 
 
 def _gs_oracle() -> str:
@@ -92,14 +80,14 @@ def _gs_oracle() -> str:
             SELECT n_nationkey AS k FROM nation
         ), pm AS MATERIALIZED (
             SELECT a.k AS m, b.k AS w,
-                   ({_hex4(
+                   ({hex4_sql(
                        "'gs-m:' || CAST(a.k AS VARCHAR) || ':'"
                        " || CAST(b.k AS VARCHAR)"
                    )}) AS r
             FROM ids a, ids b
         ), pw AS MATERIALIZED (
             SELECT a.k AS w, b.k AS m,
-                   ({_hex4(
+                   ({hex4_sql(
                        "'gs-w:' || CAST(a.k AS VARCHAR) || ':'"
                        " || CAST(b.k AS VARCHAR)"
                    )}) AS r

@@ -25,28 +25,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4_sql, query
 
 _EL_CANDS = 5
 _EL_ROUNDS = 4  # eliminate down to a winner
 
 
-def _hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
 _BALLOTS_SQL = f"""ballots AS MATERIALIZED (
             SELECT c_custkey AS voter, cand.c AS cand,
                    ROW_NUMBER() OVER (PARTITION BY c_custkey
-                       ORDER BY ({_hex4(
+                       ORDER BY ({hex4_sql(
                            "'vote:' || CAST(c_custkey AS VARCHAR)"
                            " || ':' || CAST(cand.c AS VARCHAR)"
                        )}), cand.c) AS rnk

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4_sql, query
 
 # ------------------------------------------------ phrase search
 
@@ -147,12 +147,6 @@ def _dp_case(h_expr: str) -> str:
     return f"CASE {arms} ELSE {_DP_CLAMP} END"
 
 
-def _hex4_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)" for i in range(4)]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
 _DP_KEY_SQL = "'dp-r1:' || CAST(n_nationkey AS VARCHAR) || ':' || c_mktsegment"
 
 
@@ -166,7 +160,7 @@ _DP_KEY_SQL = "'dp-r1:' || CAST(n_nationkey AS VARCHAR) || ':' || c_mktsegment"
             GROUP BY n.n_name, n.n_nationkey, c.c_mktsegment
         ), noised AS (
             SELECT n_name, c_mktsegment, true_count,
-                   ({_dp_case(_hex4_sql(_DP_KEY_SQL))}) AS noise
+                   ({_dp_case(hex4_sql(_DP_KEY_SQL))}) AS noise
             FROM counts
         )
         SELECT n_name, c_mktsegment,

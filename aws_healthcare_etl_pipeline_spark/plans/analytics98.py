@@ -18,11 +18,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8_spark, hex8_sql, query
 
 # --------------------------------------------- jackknife
 
@@ -118,19 +118,6 @@ def stats_jackknife_ratio_variance(
 # ------------------------------------------ eval-set sizing
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 _SEG_W = (
     "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
     "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
@@ -142,7 +129,7 @@ _FRACTIONS = (1, 2, 4, 8, 16)  # sixteenths, nested
     "ml_evalset_sizing_curve",
     oracle=f"""
         WITH scored AS (
-            SELECT ({_hex8_sql("'lc:' || CAST(c_custkey AS VARCHAR)")})
+            SELECT ({hex8_sql("'lc:' || CAST(c_custkey AS VARCHAR)")})
                        % 16 AS bucket,
                    CASE WHEN (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                                    AS BIGINT) // 100
@@ -150,7 +137,7 @@ _FRACTIONS = (1, 2, 4, 8, 16)  # sixteenths, nested
                              = (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                                      AS BIGINT) // 100
                                 + CAST({_SEG_W} AS BIGINT) * 10
-                                + ({_hex8_sql(
+                                + ({hex8_sql(
                                     "'noise:' || CAST(c_custkey"
                                     " AS VARCHAR)")}) % 4000 > 8000)
                         THEN 1 ELSE 0 END AS ok
@@ -188,7 +175,7 @@ def ml_evalset_sizing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     f1 = (F.col("c_acctbal").cast("decimal(15,2)") * 100).cast("long")
     f2 = F.expr(_SEG_W).cast("long")
     noise = (
-        _hex8_spark(
+        hex8_spark(
             F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
         )
         % 4000
@@ -199,7 +186,7 @@ def ml_evalset_sizing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cust.select(
         (
-            _hex8_spark(
+            hex8_spark(
                 F.concat(F.lit("lc:"), F.col("c_custkey").cast("string"))
             )
             % 16

@@ -332,11 +332,10 @@ def pq_topk_df(emb: DataFrame) -> DataFrame:
     settings (first {N_QUERIES} queries, k={TOP_K}, m=8 codebooks,
     ratio-scaled shortlist) — shared by ``sim_pq_adc_topk`` and the
     ANN bake-off so both grade the identical pipeline."""
-    from pyspark.sql import Window
-
     from ..functions.vectors import dot
     from ..operators.parallelism import widen
     from ..operators.pq import pq_encode, pq_top_k, train_pq_codebooks
+    from ..operators.topk import nearest_k
 
     # shortlist scales with the corpus (12.5%, floor 64): a FIXED 64
     # was 0.95 recall on the 500-vector fixture but 0.46 at 2000
@@ -376,12 +375,7 @@ def pq_topk_df(emb: DataFrame) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return nearest_k(rer, TOP_K, "query_id", "vec_id", "cosine")
 
 
 @query(

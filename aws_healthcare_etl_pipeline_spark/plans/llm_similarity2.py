@@ -13,10 +13,11 @@ already relies on).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot
+from ..operators.topk import nearest_k
 from ..sources.tables import load_table
 from .registry import query
 
@@ -104,9 +105,8 @@ def _sq_ctes(n_queries: int, k: int) -> str:
     "column is precomputed at ingest and only the scan+score run per "
     "query batch. Self-exclusion (vec_id <> query_id) is correct "
     "here BY CONTRACT because the queries are drawn from the corpus "
-    "id space (first 10 vectors); with a disjoint query id space "
-    "drop the predicate (the pq_top_k exclude_self discussion "
-    "applies).",
+    "id space (first 10 vectors) — the contract every similarity "
+    "operator keeps.",
 )
 def sim_sq_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -171,11 +171,6 @@ def sim_sq_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot(F.col("qv"), F.col("dq")).alias("sq_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sq_score").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= SQ_TOP_K)
-        .orderBy("query_id", "rank")
+    return nearest_k(scored, SQ_TOP_K, "query_id", "vec_id", "sq_score").orderBy(
+        "query_id", "rank"
     )

@@ -82,3 +82,56 @@ SQL_CHARGE = SQL_DISC_PRICE + " * CAST(1 + l_tax AS DECIMAL(8,2))"
 
 def sql_dsum(expr: str, typ: str = "DECIMAL(15,2)") -> str:
     return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE)"
+
+
+# ---- oracle-portable md5-hex hashes (Spark side + DuckDB SQL side) ----
+# A seeded pseudo-random draw both engines compute bit-for-bit: the
+# leading hex digits of md5(text) read as an integer. DuckDB has no
+# base-16 conv, so the SQL side folds the digits with strpos.
+
+def hex8_spark(col: Column) -> Column:
+    """Integer value of the first 8 hex digits of md5(col)."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def hex8_sql(expr: str) -> str:
+    """DuckDB twin of ``hex8_spark``."""
+    h = f"md5({expr})"
+    out = "CAST(0 AS BIGINT)"
+    for i in range(8):
+        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
+        out = f"({out} * 16 + {nib})"
+    return out
+
+
+def hex4_spark(col: Column) -> Column:
+    """Integer value of the first 4 hex digits of md5(col)."""
+    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
+
+
+def hex4_sql(expr: str) -> str:
+    """DuckDB twin of ``hex4_spark``."""
+    h = f"md5({expr})"
+    nibs = [
+        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
+        for i in range(4)
+    ]
+    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
+
+
+def split_top_level(s: str) -> list[str]:
+    """Split SQL text on commas at paren depth 0 (CASE/DECIMAL commas safe)."""
+    out, depth, cur = [], 0, []
+    for ch in s:
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        if ch == "," and depth == 0:
+            out.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(ch)
+    if cur:
+        out.append("".join(cur).strip())
+    return out

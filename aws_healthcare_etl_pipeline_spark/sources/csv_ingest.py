@@ -8,10 +8,9 @@ Reference behavior being reproduced (cited for parity checking):
   - append write partitioned by ingest_date .... glue_job_script.py:48-53
 
 Deliberate departures, for 100 TB scale (SURVEY.md §4):
-  - ``repartition(1)`` (glue_job_script.py:49) is NOT the default. Output
-    file count is a knob: ``output_files=None`` lets AQE/source
-    parallelism decide (right at scale), an int reproduces the
-    reference's demo behavior.
+  - ``repartition(1)`` (glue_job_script.py:49) is dropped: output file
+    count is left to AQE/source parallelism, which is right at scale
+    (a single writer task serializes the whole write).
   - ``inferSchema=True`` costs an extra full pass over the CSV; an
     explicit ``schema`` is the fast path and is mandatory for the
     streaming variant (streaming/ingest_stream.py).
@@ -63,7 +62,6 @@ class IngestConfig:
     object_key: str = ""                # set -> ingest just that object
     schema: T.StructType | None = None  # None -> inferSchema (reference parity)
     ingest_date: str | None = None      # None -> driver-time UTC today
-    output_files: int | None = None     # None -> let Spark/AQE size output
     mode: str = "append"                # "append" (parity) | "overwrite_partition"
     extra_read_options: dict[str, str] = field(default_factory=dict)
 
@@ -99,10 +97,6 @@ def transform(df: DataFrame, ingest_date: str) -> DataFrame:
 
 
 def write_partitioned(df: DataFrame, cfg: IngestConfig) -> None:
-    if cfg.output_files is not None:
-        # reference parity (repartition(1), glue_job_script.py:49); at
-        # scale prefer coalesce: no shuffle, just fewer output tasks.
-        df = df.coalesce(cfg.output_files)
     writer = df.write.partitionBy("ingest_date")
     if cfg.mode == "overwrite_partition":
         # idempotent re-run: replaces only the partitions present in df

@@ -75,8 +75,9 @@ def main() -> None:
         # Jobs per warm run via the PUBLIC job-group API (the r11 form
         # read dagScheduler().nextJobId(), a private accessor that went
         # away in Spark 4.1): tag one run with a unique group id and
-        # count the group's job ids afterwards.
-        best, jobs_delta = None, None
+        # count the group's job ids afterwards. The job count reported is
+        # the one of the min-time run, so both figures describe one run.
+        runs = []
         for r in range(args.runs):
             group = f"profile:{name}:{r}"
             spark.sparkContext.setJobGroup(group, name)
@@ -84,12 +85,10 @@ def main() -> None:
             d2 = spec.fn(spark, SF_DIR)
             d2.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            spark.sparkContext.setJobGroup(None, None)
-            best = dt if best is None else min(best, dt)
-            try:
-                jobs_delta = len(tracker.getJobIdsForGroup(group))
-            except Exception:
-                jobs_delta = -1
+            # PySpark exposes no clearJobGroup(); call the JVM context's
+            spark.sparkContext._jsc.clearJobGroup()
+            runs.append((dt, len(tracker.getJobIdsForGroup(group))))
+        best, jobs_delta = min(runs)
         print(
             f"{name}: build={t_build:.3f}s first={t_first:.3f}s "
             f"warm_min={best:.3f}s jobs~{jobs_delta}",

@@ -116,6 +116,9 @@ def main() -> None:
                 "mem",
                 op.get("memoryUsedBytes"),
             )
+        # free this run's sink so later runs do not time a growing heap
+        q.stop()
+        spark.catalog.dropTempView(sink)
 
 
 if __name__ == "__main__":

@@ -141,11 +141,11 @@ def test_minhash_seed_family(spark):
     so the seed default was silently replaced by the array-index
     Column — collapsing all 64 seeds into one position-sensitive hash
     (observed: sig agreement 0/64 on a J=0.97 pair whose arrays were
-    offset by one position).
+    offset by one position). Pinned on the hot path's signature:
+    ``_seed_minima_expr`` over a materialized xxhash64 array, as
+    ``minhash_near_duplicates`` builds it.
     """
-    from aws_healthcare_etl_pipeline_spark.operators.dedup import (
-        minhash_signature_from_shingles,
-    )
+    from aws_healthcare_etl_pipeline_spark.operators.dedup import _seed_minima_expr
 
     df = spark.createDataFrame(
         [
@@ -158,9 +158,11 @@ def test_minhash_seed_family(spark):
     )
     rows = {
         r.doc_id: r.sig
-        for r in df.select(
-            "doc_id", minhash_signature_from_shingles(F.col("shingles"), 64).alias("sig")
-        ).collect()
+        for r in df.withColumn(
+            "__mh_base", F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+        )
+        .select("doc_id", _seed_minima_expr("__mh_base", 64).alias("sig"))
+        .collect()
     }
     # distinct seeds: a 4-element set collides to one min per seed, but
     # across 64 independent seeds the mins must not all be equal

@@ -1,5 +1,6 @@
 """Similarity-search operators: brute-force correctness vs NumPy, LSH
-recall vs the brute-force truth."""
+recall vs the brute-force truth, and the ranking contract every top-k
+tier shares."""
 
 from __future__ import annotations
 
@@ -7,6 +8,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from aws_healthcare_etl_pipeline_spark.operators.ivf import ivf_top_k
+from aws_healthcare_etl_pipeline_spark.operators.pq import pq_encode, pq_top_k
 from aws_healthcare_etl_pipeline_spark.operators.similarity import (
     brute_force_top_k,
     lsh_top_k,
@@ -81,3 +84,52 @@ def test_lsh_scores_are_exact_cosines(spark):
     for r in lsh_top_k(emb, queries, k=K, dim=64).collect():
         assert (r.query_id, r.vec_id) in bf
         assert abs(bf[(r.query_id, r.vec_id)] - r.cosine) < 1e-12
+
+
+# Ranking contract shared by every top-k tier, on a corpus with planted
+# exact duplicates: 0 and 1 are the queries (drawn from the corpus);
+# 3 and 5 copy vector 0, 4 and 7 copy vector 1. Every vector is two
+# 2-d subvectors from _SUBS, so a PQ codebook holding exactly _SUBS
+# encodes it losslessly and ADC scores tie wherever cosines do.
+_SUBS = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.0, -1.0]]
+_PLANTED = {
+    0: _SUBS[0] + _SUBS[0],
+    1: _SUBS[1] + _SUBS[1],
+    2: _SUBS[0] + _SUBS[1],
+    3: _SUBS[0] + _SUBS[0],
+    4: _SUBS[1] + _SUBS[1],
+    5: _SUBS[0] + _SUBS[0],
+    6: _SUBS[2] + _SUBS[3],
+    7: _SUBS[1] + _SUBS[1],
+}
+_CENTROIDS = np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]])
+_BOOKS = np.array([_SUBS, _SUBS])
+
+
+def _pq(corpus, queries, k):
+    return pq_top_k(pq_encode(corpus, _BOOKS), queries, _BOOKS, k)
+
+
+@pytest.mark.parametrize(
+    "top_k",
+    [
+        lambda c, q, k: brute_force_top_k(c, q, k),
+        lambda c, q, k: lsh_top_k(c, q, k, dim=4),
+        lambda c, q, k: ivf_top_k(c, q, k, _CENTROIDS, nprobe=len(_CENTROIDS)),
+        _pq,
+    ],
+    ids=["brute_force", "lsh", "ivf", "pq"],
+)
+def test_ties_rank_lower_id_first_and_never_self(spark, top_k):
+    corpus = spark.createDataFrame(
+        sorted(_PLANTED.items()), "vec_id long, embedding array<float>"
+    )
+    queries = corpus.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    got = {
+        (r.query_id, r.rank): r.vec_id for r in top_k(corpus, queries, 2).collect()
+    }
+    # each query's own id is an exact duplicate too and the lowest id
+    # of its tie group, so it would rank first if it were returned
+    assert got == {(0, 1): 3, (0, 2): 5, (1, 1): 4, (1, 2): 7}
